@@ -139,6 +139,12 @@ trait Workload {
   def afterOp(i: Int, k: Int, ok: Boolean): Unit = ()
   def finish(out: mutable.LinkedHashMap[String, Any]): Unit = ()
   def close(): Unit
+
+  /** A warm-up operation that fails is reported and skipped: the same
+    * operation fails again in the timed rounds, where it is counted.
+    */
+  protected def warm(body: => Unit): Unit =
+    try body catch { case e: Exception => System.err.println(s"[perfbench] warm-up operation failed: $e") }
 }
 
 /** Every timed operation's output, one JSON line each. */

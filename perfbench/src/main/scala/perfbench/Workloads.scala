@@ -106,9 +106,9 @@ object Layers extends AdaptiveSparkPlanHelper {
 final class Dashboard(ctx: Ctx) extends Workload {
   private val tr = ctx.tracer
   private val layers = new Layers(ctx)
-  private val warm = Layers.statements(ctx.runDir.resolve("warm.tsv"))
+  private val warmStmts = Layers.statements(ctx.runDir.resolve("warm.tsv"))
   private val stmts = Layers.statements(ctx.runDir.resolve("ops.tsv"))
-  val opsPerRound: Int = warm.map(_._1).distinct.size
+  val opsPerRound: Int = warmStmts.map(_._1).distinct.size
   private var engine: graft.Engine = _
   private var server: graft.http.PgWireServer = _
   private var client: PgClient = _
@@ -124,7 +124,7 @@ final class Dashboard(ctx: Ctx) extends Workload {
   }
 
   /** `warm.tsv` holds the warm-up rounds. */
-  def warmup(rounds: Int): Unit = warm.foreach { case (_, q) => client.query(q) }
+  def warmup(rounds: Int): Unit = warmStmts.foreach { case (_, q) => warm(client.query(q)) }
 
   private def stmt(i: Int) = stmts(i % stmts.size)
 
@@ -164,9 +164,9 @@ final class Dashboard(ctx: Ctx) extends Workload {
 final class Scan(ctx: Ctx) extends Workload {
   private val tr = ctx.tracer
   private val layers = new Layers(ctx)
-  private val warm = Layers.statements(ctx.runDir.resolve("warm.tsv"))
+  private val warmStmts = Layers.statements(ctx.runDir.resolve("warm.tsv"))
   private val stmts = Layers.statements(ctx.runDir.resolve("ops.tsv"))
-  val opsPerRound: Int = warm.map(_._1).distinct.size
+  val opsPerRound: Int = warmStmts.map(_._1).distinct.size
   private var engine: graft.Engine = _
   private var last: Array[Row] = Array.empty
 
@@ -184,7 +184,7 @@ final class Scan(ctx: Ctx) extends Workload {
   }
 
   /** `warm.tsv` holds the warm-up rounds. */
-  def warmup(rounds: Int): Unit = warm.foreach { case (_, q) => engine.sql(q).collect() }
+  def warmup(rounds: Int): Unit = warmStmts.foreach { case (_, q) => warm(engine.sql(q).collect()) }
 
   private def stmt(i: Int) = stmts(i % stmts.size)
 
@@ -369,7 +369,7 @@ final class Corpus(ctx: Ctx) extends Workload {
   }
 
   def warmup(rounds: Int): Unit =
-    (1 to rounds).foreach(_ => names.foreach(n => graft.SparkEntry.queries(n)(ctx.spark, ctx.dataDir).collect()))
+    (1 to rounds).foreach(_ => names.foreach(n => warm(graft.SparkEntry.queries(n)(ctx.spark, ctx.dataDir).collect())))
 
   def run(i: Int, k: Int): String = {
     val n = names(k)
