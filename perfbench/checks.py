@@ -1,15 +1,24 @@
 """Checks of the engine's outputs against results computed apart from it.
 
 DuckDB answers the statements over the same Parquet files; generator
-totals answer the ingest cycle. Every check returns an error string, or
-None when the output matches.
+totals answer the ingest cycle. Every comparison returns an error string,
+or None when the output matches. Every checker returns (errors, wrong): the
+check failures, which make the run incorrect, and the wrong outputs of
+statements that `inputs.py` marks with a known engine defect, which count
+as failed operations instead.
 """
 import datetime
 import decimal
+import hashlib
 import json
 import math
+import os
+import pickle
 
 REL_TOL = 1e-9
+ORACLE_CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "target", "oracle")
+CORPUS_TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events",
+                 "documents", "embeddings")
 
 
 def _same(exp, act):
@@ -113,20 +122,21 @@ def _duck():
     return con
 
 
-def _statements(run_dir, info, con, errors):
+def _statements(run_dir, info, con):
     """Every timed statement's output against DuckDB over the same files;
     then the self-test: one perturbed output must fail the same check."""
-    cache = {}
-    results = load_results(f"{run_dir}/results.jsonl")
+    cache, errors, wrong = {}, [], []
     first = None
-    for r in results:
+    for r in load_results(f"{run_dir}/results.jsonl"):
         if "error" in r:
             continue
         o = info["oracle"][r["sql"]]
         if r["sql"] not in cache:
             cache[r["sql"]] = con.sql(o["sql"]).fetchall()
         err = compare_rows(cache[r["sql"]], r["rows"], o["ordered"])
-        if err:
+        if err and o.get("defect"):
+            wrong.append(f"op {r['op']} ({r['kind']}, {o['defect']}): {err}")
+        elif err:
             errors.append(f"op {r['op']} ({r['kind']}): {err}")
         elif first is None and r["rows"]:
             first = (r, o)
@@ -134,15 +144,13 @@ def _statements(run_dir, info, con, errors):
         errors.append("no non-empty output to self-test the checker on")
     elif compare_rows(cache[first[0]["sql"]], perturb(first[0]["rows"]), first[1]["ordered"]) is None:
         errors.append("self-test: a perturbed output passed the check")
-    return results
+    return errors, wrong
 
 
 def check_dashboard(run_dir, info, out):
     con = _duck()
     con.sql(f"CREATE VIEW events AS SELECT * FROM '{info['data_dir']}/events.parquet'")
-    errors = []
-    _statements(run_dir, info, con, errors)
-    return errors
+    return _statements(run_dir, info, con)
 
 
 def check_scan(run_dir, info, out):
@@ -150,9 +158,7 @@ def check_scan(run_dir, info, out):
     for t in ("trades", "quotes"):
         con.sql(f"CREATE VIEW {t} AS SELECT * EXCLUDE (day) FROM read_parquet('{info['data_dir']}/{t}/*/*.parquet', "
                 "hive_partitioning = true)")
-    errors = []
-    _statements(run_dir, info, con, errors)
-    return errors
+    return _statements(run_dir, info, con)
 
 
 def _ilp_state(batches):
@@ -221,13 +227,34 @@ def check_ilp(run_dir, info, out):
         err = compare_rows(want, view, False)
         if err:
             errors.append(f"{m} view: {err}")
-    return errors
+    return errors, []
+
+
+def _corpus_oracle(con, sql, data_dir):
+    """DuckDB's (columns, rows) for `sql`. The corpus oracle queries are
+    fixed and read only the fixed test data, and two of them take 3-6 s, so
+    the answer is kept under target/ and used again while the SQL and the
+    data files stay the same."""
+    key = hashlib.sha256(sql.encode())
+    for t in CORPUS_TABLES:
+        st = os.stat(f"{data_dir}/{t}.parquet")
+        key.update(f"{t}:{st.st_size}:{st.st_mtime_ns}".encode())
+    path = os.path.join(ORACLE_CACHE, key.hexdigest() + ".pickle")
+    if os.path.exists(path):
+        with open(path, "rb") as f:
+            return pickle.load(f)
+    rel = con.sql(sql)
+    answer = ([c.lower() for c in rel.columns], rel.fetchall())
+    os.makedirs(ORACLE_CACHE, exist_ok=True)
+    with open(path + ".tmp", "wb") as f:
+        pickle.dump(answer, f)
+    os.replace(path + ".tmp", path)
+    return answer
 
 
 def check_corpus(run_dir, info, out):
     con = _duck()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events",
-              "documents", "embeddings"):
+    for t in CORPUS_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{info['data_dir']}/{t}.parquet'")
     errors, cache, first = [], {}, None
     for r in load_results(f"{run_dir}/results.jsonl"):
@@ -235,10 +262,9 @@ def check_corpus(run_dir, info, out):
             continue
         name = r["kind"]
         if name not in cache:
-            rel = con.sql(out["oracle"][name])
-            cols = [c.lower() for c in rel.columns]
+            cols, rows = _corpus_oracle(con, out["oracle"][name], info["data_dir"])
             idx = [cols.index(c.lower()) for c in r["cols"]]
-            cache[name] = [[row[i] for i in idx] for row in rel.fetchall()]
+            cache[name] = [[row[i] for i in idx] for row in rows]
         err = compare_rows(cache[name], r["rows"], False)
         if err:
             errors.append(f"op {r['op']} ({name}): {err}")
@@ -248,7 +274,7 @@ def check_corpus(run_dir, info, out):
         errors.append("no non-empty output to self-test the checker on")
     elif compare_rows(cache[first["kind"]], perturb(first["rows"]), False) is None:
         errors.append("self-test: a perturbed output passed the check")
-    return errors
+    return errors, []
 
 
 CHECKERS = {"ts_dashboard": check_dashboard, "ts_scan": check_scan, "ilp_ingest": check_ilp,

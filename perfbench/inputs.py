@@ -31,33 +31,31 @@ def _write_tsv(path, rows):
 
 # ---- ts_dashboard ----------------------------------------------------------
 
-def _dash_round(rng, r):
-    """Round `r`: one statement per dashboard type. Choices that change a
-    statement's cost rotate with `r`, so every run gets the same mix; the
-    literals are drawn from `rng`. Returns [(kind, questdb_sql, duckdb_sql,
-    ordered)]."""
-    out = []
-    thr = rng.randint(450, 470)
-    hours = 6
-    mode = ("PREV", "NULL", "LINEAR")[r % 3]
-    # FILL(LINEAR) runs unkeyed: keyed, the engine fills only between a
-    # key's own first and last bucket (see CHANGES.md)
-    key = "" if mode == "LINEAR" else "event_type, "
+# Keyed FILL(LINEAR) gives wrong rows: the engine fills each key only
+# between its own first and last bucket, not over the grid every key shares
+# (see CHANGES.md). Its statement is fixed text, so it fails in every round
+# whatever the seed, and counts as a failed operation until that is fixed.
+LINEAR_DEFECT = "keyed FILL(LINEAR) fills each key only between its own first and last bucket"
+LINEAR_THRESHOLD = 460
+
+
+def _dash_fill(mode, thr, hours=6):
+    """A keyed `SAMPLE BY … FILL(mode)` over events and its DuckDB form:
+    every event type on one grid of buckets, from the first to the last
+    bucket of any type."""
     agg = "round(avg(value), 4)" if mode == "LINEAR" else "max(value)"
-    q = f"SELECT {key}ts, {agg} AS v FROM events WHERE value > {thr} SAMPLE BY {hours}h FILL({mode})"
-    k = "event_type" if key else "0"
-    base = (f"WITH base AS (SELECT {k} AS k, time_bucket(INTERVAL {hours} HOURS, ts, "
+    q = f"SELECT event_type, ts, {agg} AS v FROM events WHERE value > {thr} SAMPLE BY {hours}h FILL({mode})"
+    base = (f"WITH base AS (SELECT event_type AS k, time_bucket(INTERVAL {hours} HOURS, ts, "
             f"TIMESTAMP '1970-01-01') AS ts, {agg} AS v FROM events WHERE value > {thr} GROUP BY 1, 2), "
             "bounds AS (SELECT min(ts) AS mn, max(ts) AS mx FROM base), "
             f"spine AS (SELECT unnest(generate_series(mn, mx, INTERVAL {hours} HOURS)) AS ts FROM bounds), "
             "keys AS (SELECT DISTINCT k FROM base), "
             "grid AS (SELECT keys.k, s.ts, b.v, b.v IS NOT NULL AS present, epoch_us(s.ts) AS t "
             "FROM keys CROSS JOIN spine s LEFT JOIN base b USING (k, ts)) ")
-    sel = "k AS event_type, " if key else ""
     if mode == "NULL":
-        d = base + f"SELECT {sel}ts, v FROM grid"
+        d = base + "SELECT k AS event_type, ts, v FROM grid"
     elif mode == "PREV":
-        d = base + (f"SELECT {sel}ts, last_value(v IGNORE NULLS) OVER (PARTITION BY k "
+        d = base + ("SELECT k AS event_type, ts, last_value(v IGNORE NULLS) OVER (PARTITION BY k "
                     "ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v FROM grid")
     else:
         d = base + (", carr AS (SELECT *, "
@@ -67,9 +65,21 @@ def _dash_round(rng, r):
                     "first_value(CASE WHEN present THEN v END IGNORE NULLS) OVER wn AS nv FROM grid "
                     "WINDOW wp AS (PARTITION BY k ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), "
                     "wn AS (PARTITION BY k ORDER BY ts ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)) "
-                    f"SELECT {sel}ts, CASE WHEN present THEN v ELSE pv + (nv - pv) * "
+                    "SELECT k AS event_type, ts, CASE WHEN present THEN v ELSE pv + (nv - pv) * "
                     "CAST(t - pt AS DOUBLE) / CAST(nt - pt AS DOUBLE) END AS v FROM carr")
-    out.append(("sample_fill", q, d, False))
+    return q, d
+
+
+def _dash_round(rng, r):
+    """Round `r`: one statement per dashboard type. Choices that change a
+    statement's cost rotate with `r`, so every run gets the same mix; the
+    literals are drawn from `rng`. Returns [(kind, questdb_sql, duckdb_sql,
+    ordered, defect)]."""
+    out = []
+    q, d = _dash_fill(("PREV", "NULL")[r % 2], rng.randint(450, 470))
+    out.append(("sample_fill", q, d, False, None))
+    q, d = _dash_fill("LINEAR", LINEAR_THRESHOLD)
+    out.append(("sample_fill_linear", q, d, False, LINEAR_DEFECT))
 
     et = EVENT_TYPES[r % 5]
     tz = ZONES[r % 3]
@@ -77,7 +87,7 @@ def _dash_round(rng, r):
          f"SAMPLE BY 1d ALIGN TO CALENDAR TIME ZONE '{tz}'")
     d = (f"SELECT CAST(timezone('{tz}', date_trunc('day', timezone('{tz}', ts::TIMESTAMPTZ))::TIMESTAMP) "
          f"AS TIMESTAMP) AS ts, count(*) AS n, max(value) AS mx FROM events WHERE event_type = '{et}' GROUP BY 1")
-    out.append(("sample_tz", q, d, False))
+    out.append(("sample_tz", q, d, False, None))
 
     et = EVENT_TYPES[(r + 1) % 5]
     users = rng.randint(900, 1100)
@@ -85,7 +95,7 @@ def _dash_round(rng, r):
          "LATEST ON ts PARTITION BY user_id")
     d = (f"SELECT user_id, ts, value FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC) AS rn "
          f"FROM events WHERE event_type = '{et}' AND user_id < {users}) WHERE rn = 1")
-    out.append(("latest_on", q, d, False))
+    out.append(("latest_on", q, d, False, None))
 
     a, b = EVENT_TYPES[r % 5], EVENT_TYPES[(r + 2) % 5]
     thr = rng.randint(450, 470)
@@ -95,7 +105,7 @@ def _dash_round(rng, r):
     d = (f"SELECT p.event_id, p.ts, p.user_id, p.value, c.ts1, c.value1 FROM (SELECT event_id, ts, user_id, value "
          f"FROM events WHERE event_type = '{a}') p ASOF LEFT JOIN (SELECT user_id, ts AS ts1, value AS value1 "
          f"FROM events WHERE event_type = '{b}') c ON p.user_id = c.user_id AND p.ts >= c.ts1 WHERE p.value > {thr}")
-    out.append(("asof_keyed", q, d, False))
+    out.append(("asof_keyed", q, d, False, None))
 
     day = rng.randint(1, 14)
     period = (3, 5)[r % 2]
@@ -106,7 +116,7 @@ def _dash_round(rng, r):
         f"ts < TIMESTAMP '2024-01-{day:02d}' + INTERVAL {i * period} DAY + INTERVAL 25 HOUR)"
         for i in range(count))
     d = f"SELECT event_id, ts, value FROM events WHERE {conds}"
-    out.append(("interval_repeat", q, d, False))
+    out.append(("interval_repeat", q, d, False, None))
 
     day = rng.randint(1, 30)
     hour = rng.randint(0, 23)
@@ -115,14 +125,14 @@ def _dash_round(rng, r):
     d = (f"SELECT event_type, count(*) AS n, sum(value) AS s FROM events WHERE ts >= TIMESTAMP "
          f"'2024-01-{day:02d} {hour:02d}:00:00' AND ts < TIMESTAMP '2024-01-{day:02d} {hour:02d}:00:00' "
          "+ INTERVAL 1 HOUR GROUP BY 1")
-    out.append(("interval_plain", q, d, False))
+    out.append(("interval_plain", q, d, False, None))
 
     et = EVENT_TYPES[(r + 3) % 5]
     n = rng.randint(90, 110)
     q = f"SELECT event_id, ts, user_id, value FROM events WHERE event_type = '{et}' LIMIT -{n}"
     d = (f"SELECT event_id, ts, user_id, value FROM (SELECT * FROM events WHERE event_type = '{et}' "
          f"ORDER BY ts DESC LIMIT {n}) ORDER BY ts")
-    out.append(("negative_limit", q, d, True))
+    out.append(("negative_limit", q, d, True, None))
     return out
 
 
@@ -132,16 +142,14 @@ def dashboard(rng, run_dir, rounds):
     def emit(path, rounds):
         rows = []
         for r in range(rounds):
-            for kind, q, d, ordered in _dash_round(rng, r):
+            for kind, q, d, ordered, defect in _dash_round(rng, r):
                 rows.append((kind, q))
-                oracle[q] = {"sql": d, "ordered": ordered}
+                oracle[q] = {"sql": d, "ordered": ordered, "defect": defect}
         _write_tsv(path, rows)
 
     emit(os.path.join(run_dir, "warm.tsv"), WARM_ROUNDS["ts_dashboard"])
     emit(os.path.join(run_dir, "ops.tsv"), rounds)
     return {"oracle": oracle, "data_dir": DATA_DIR}
-
-
 
 
 # ---- ts_scan ---------------------------------------------------------------
@@ -227,20 +235,20 @@ def _scan_round(rng, gaps, r):
          "grid AS (SELECT keys.sym, s.ts, b.p, b.q FROM keys CROSS JOIN spine s LEFT JOIN base b USING (sym, ts)) "
          f"SELECT sym, ts, {fill} FROM grid WINDOW w AS (PARTITION BY sym ORDER BY ts "
          "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
-    out.append(("sample_fill", q, d, False))
+    out.append(("sample_fill", q, d, False, None))
 
     k = rng.randint(880, 920)
     q = f"SELECT sym, ts, price, qty FROM trades WHERE qty > {k} LATEST ON ts PARTITION BY sym"
     d = (f"SELECT sym, ts, price, qty FROM (SELECT *, row_number() OVER (PARTITION BY sym ORDER BY ts DESC) AS rn "
          f"FROM trades WHERE qty > {k}) WHERE rn = 1")
-    out.append(("latest_on", q, d, False))
+    out.append(("latest_on", q, d, False, None))
 
     k = rng.randint(90, 110)
     q = (f"SELECT sym, count(*) AS n, avg(price - bid) AS s FROM (SELECT t.sym, t.price, t.qty, q.bid "
          f"FROM trades t ASOF JOIN quotes q ON (sym)) WHERE qty > {k} GROUP BY sym")
     d = (f"SELECT t.sym, count(*) AS n, avg(t.price - q.bid) AS s FROM trades t ASOF LEFT JOIN quotes q "
          f"ON t.sym = q.sym AND t.ts >= q.ts WHERE t.qty > {k} GROUP BY t.sym")
-    out.append(("asof_keyed", q, d, False))
+    out.append(("asof_keyed", q, d, False, None))
 
     days = [d for d in range(SCAN_DAYS) if not any(lo <= d < hi for lo, hi in gaps)]
     start = SCAN_START + np.timedelta64(rng.choice(days) * 24 + rng.randint(1, 22), "h")
@@ -256,7 +264,7 @@ def _scan_round(rng, gaps, r):
          f"WHERE ts >= TIMESTAMPTZ '{qlo}' AND ts < TIMESTAMPTZ '{qhi}') q ON t.sym = q.sym "
          "AND q.ts >= t.ts - INTERVAL 1 MINUTE AND q.ts <= t.ts + INTERVAL 1 MINUTE "
          "GROUP BY t.sym, t.ts, t.price")
-    out.append(("window_join", q, d, False))
+    out.append(("window_join", q, d, False, None))
 
     hi = str(start + np.timedelta64(30, "m")).replace("T", " ")
     off = (60, 300, 600)[r % 3]
@@ -266,7 +274,7 @@ def _scan_round(rng, gaps, r):
          f"ts + to_microseconds(o) AS h FROM trades, (VALUES (0), ({off * 1_000_000})) v(o) "
          f"WHERE ts >= TIMESTAMPTZ '{lo}' AND ts < TIMESTAMPTZ '{hi}') t "
          "ASOF LEFT JOIN quotes q ON t.sym = q.sym AND t.h >= q.ts")
-    out.append(("horizon_join", q, d, False))
+    out.append(("horizon_join", q, d, False, None))
     return out
 
 
@@ -277,9 +285,9 @@ def scan(rng, run_dir, rounds):
     for path, n in (("warm.tsv", WARM_ROUNDS["ts_scan"]), ("ops.tsv", rounds)):
         rows = []
         for r in range(n):
-            for kind, q, d, ordered in _scan_round(rng, gaps, r):
+            for kind, q, d, ordered, defect in _scan_round(rng, gaps, r):
                 rows.append((kind, q))
-                oracle[q] = {"sql": d, "ordered": ordered}
+                oracle[q] = {"sql": d, "ordered": ordered, "defect": defect}
         _write_tsv(os.path.join(run_dir, path), rows)
     return {"oracle": oracle, "data_dir": data, "sizes": sizes}
 

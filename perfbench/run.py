@@ -30,8 +30,8 @@ SPARK_JARS = "/opt/spark/jars"
 HEAP = "3g"
 # Nominal seconds per round of each workload's operations. A run does
 # round(--seconds / this) whole rounds: the same work in every run. At
-# --seconds 10 that is 7, 5, 4 and 3 rounds, 8-13 s on a 4-core machine.
-ROUND_S = {"ts_dashboard": 1.4, "ts_scan": 2.2, "ilp_ingest": 2.5, "corpus_pipeline": 3.4}
+# --seconds 10 that is 6, 5, 4 and 3 rounds, 8-13 s on a 4-core machine.
+ROUND_S = {"ts_dashboard": 1.6, "ts_scan": 2.2, "ilp_ingest": 2.5, "corpus_pipeline": 3.4}
 WORKLOADS = tuple(ROUND_S)
 JDK_OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net", "java.nio",
              "java.util", "java.util.concurrent", "java.util.concurrent.atomic", "sun.nio.ch",
@@ -124,33 +124,41 @@ def main():
     import inputs
 
     # fresh table and scratch directories for every run, removed afterwards
+    # unless the JVM or a check failed
     run_dir = os.path.join(HERE, "target", "runs", f"{a.workload}-{a.seed}-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
     os.makedirs(run_dir)
+    keep = True
     try:
         rounds = max(1, round(a.seconds / ROUND_S[a.workload]))
-        t0 = time.time()
         info = inputs.GENERATORS[a.workload](random.Random(a.seed), run_dir, rounds)
-        gen_s = time.time() - t0
         out = run_jvm(classes, run_dir, a.workload, inputs.WARM_ROUNDS[a.workload], rounds, a.trace)
-        errors = checks.CHECKERS[a.workload](run_dir, info, out)
+        errors, wrong = checks.CHECKERS[a.workload](run_dir, info, out)
         for e in errors[:10]:
             print(f"perfbench: check failed: {e}", file=sys.stderr)
+        if wrong:
+            print(f"perfbench: {len(wrong)} operations of a known defect gave wrong results, counted as "
+                  f"failed: {wrong[0]}", file=sys.stderr)
         metrics = (layer_metrics(a.workload, info, out) if a.trace
-                   else end_to_end(a.workload, info, out, gen_s, run_dir))
-        result = {"correct": not errors, "attempted": out["attempted"], "failed": out["failed"],
+                   else end_to_end(a.workload, info, out, run_dir))
+        result = {"correct": not errors, "attempted": out["attempted"], "failed": out["failed"] + len(wrong),
                   "metrics": metrics}
+        keep = bool(errors)
     finally:
-        if not os.environ.get("PERFBENCH_KEEP"):
+        if keep:
+            print(f"perfbench: run directory kept for inspection: {run_dir}", file=sys.stderr)
+        else:
             shutil.rmtree(run_dir, ignore_errors=True)
     print(json.dumps(result))
 
 
-def end_to_end(workload, info, out, gen_s, run_dir):
+def end_to_end(workload, info, out, run_dir):
     lat = out["latencies_ms"]
     done = len(lat)
     m = {
-        "setup_s": (gen_s + out["setup_s"], "s"),
+        # JVM start to the first timed operation; the inputs run.py makes
+        # from the seed beforehand are the benchmark's work, not the engine's
+        "setup_s": (out["setup_s"], "s"),
         "op_ms": (op_ms(out), "ms"),
         "ops_per_s": (done / out["timed_s"], "1/s"),
         "cpu_ms_per_op": (out["cpu_ms"] / out["attempted"], "ms"),

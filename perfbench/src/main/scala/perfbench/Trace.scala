@@ -114,8 +114,9 @@ final class Tracer(val enabled: Boolean, sc: SparkContext) {
         r
     }
 
+  /** A per-operation value; ignored outside timed operations (set-up, warm-up). */
   def add(metric: String, v: Double): Unit =
-    if (enabled) perOp.getOrElseUpdate(metric, mutable.ArrayBuffer.empty) += v
+    if (enabled && op >= 0) perOp.getOrElseUpdate(metric, mutable.ArrayBuffer.empty) += v
 
   def total(metric: String, v: Double): Unit =
     if (enabled) totals(metric) = totals.getOrElse(metric, 0.0) + v

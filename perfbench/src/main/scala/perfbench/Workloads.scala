@@ -25,26 +25,48 @@ final class Layers(ctx: Ctx) {
 
   /** The dialect's text passes, timed apart from the statement (traced only). */
   def rewrites(q: String): Unit = if (tr.enabled) {
-    val t0 = System.nanoTime()
-    tr.span("sql.rewrite") {
+    timed("sql.rewrite", "sql.rewrite_ms") {
       graft.sql.DialectRewrites(q)
       graft.sql.AutoAlias.rewriteQuery(q)
       graft.sql.QuestSql.rewrite(q)
     }
-    tr.add("sql.rewrite_ms", (System.nanoTime() - t0) / 1e6)
+  }
+
+  private var engineNs = 0L
+
+  /** A span around `body`, whose own duration counts toward [[engineMs]]
+    * and, if `metric` is given, is the operation's `metric`. Called inside
+    * [[Tracer.counted]], so the listener-bus drains around it are not part
+    * of the time.
+    */
+  def timed[T](span: String, metric: String = "")(body: => T): T = {
+    val t0 = System.nanoTime()
+    try tr.span(span)(body)
+    finally {
+      val ns = System.nanoTime() - t0
+      engineNs += ns
+      if (metric.nonEmpty) tr.add(metric, ns / 1e6)
+    }
+  }
+
+  /** Runs `body` and returns the time its [[timed]] calls spent in the
+    * engine, code generation left out: of two runs of the same work only
+    * the first pays it.
+    */
+  def engineMs(body: => Unit): Double = {
+    engineNs = 0L
+    val cg = Jvm.codegenCompileMs
+    body
+    engineNs / 1e6 - (Jvm.codegenCompileMs - cg)
   }
 
   /** Builds a DataFrame in layer `layer` (`sql` or `pipeline`), counting
     * the Spark jobs that run before any action.
     */
   def build(layer: String)(body: => DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
     val id = tr.spans.size
-    val df = tr.counted(layer, Map("jobs" -> "build_jobs")) { tr.span(s"$layer.build")(body) }
-    if (tr.enabled) {
-      tr.add(s"$layer.build_ms", (System.nanoTime() - t0) / 1e6)
-      phase(df, "analysis", "plans.analysis", id)
-    }
+    val df = tr.counted(layer, Map("jobs" -> "build_jobs")) { timed(s"$layer.build", s"$layer.build_ms")(body) }
+    if (tr.enabled) phase(df, "analysis", "plans.analysis", id)
     df
   }
 
@@ -52,16 +74,12 @@ final class Layers(ctx: Ctx) {
   def execute[T](df: DataFrame)(action: DataFrame => T): T = {
     if (tr.enabled) {
       val id = tr.spans.size
-      tr.span("plans.plan")(df.queryExecution.executedPlan)
+      timed("plans.plan")(df.queryExecution.executedPlan)
       phase(df, "optimization", "plans.optimize", id)
       phase(df, "planning", "plans.planning", id)
     }
-    val t0 = System.nanoTime()
-    val r = tr.counted("exec", execKeys.map(k => k -> k).toMap) { tr.span("exec.action")(action(df)) }
-    if (tr.enabled) {
-      tr.add("exec.ms", (System.nanoTime() - t0) / 1e6)
-      tr.add("exec.scan_files", Layers.scanFiles(df.queryExecution.executedPlan).toDouble)
-    }
+    val r = tr.counted("exec", execKeys.map(k => k -> k).toMap) { timed("exec.action", "exec.ms")(action(df)) }
+    if (tr.enabled) tr.add("exec.scan_files", Layers.scanFiles(df.queryExecution.executedPlan).toDouble)
     r
   }
 
@@ -145,10 +163,8 @@ final class Dashboard(ctx: Ctx) extends Workload {
       // wire. Code generation is left out of both sides, since only the
       // first of the two pays it.
       layers.rewrites(q)
-      val cg = Jvm.codegenCompileMs
-      val t0 = System.nanoTime()
-      layers.drain(layers.build("sql")(engine.sql(q)))
-      tr.add("http.wire_ms", wireMs - ((System.nanoTime() - t0) / 1e6 - (Jvm.codegenCompileMs - cg)))
+      val inproc = layers.engineMs(layers.drain(layers.build("sql")(engine.sql(q))))
+      tr.add("http.wire_ms", wireMs - inproc)
     }
   }
 
@@ -240,6 +256,8 @@ final class IlpIngest(ctx: Ctx) extends Workload {
 
   private def readSql(m: String) =
     s"SELECT ts, sym, count() AS n, sum(qty) AS qty FROM $m SAMPLE BY 1d"
+  /** Rows `/exec` may return, which it applies as `LIMIT`. */
+  private val readLimit = 100000
 
   def setup(): Unit = {
     val t0 = System.nanoTime()
@@ -251,10 +269,13 @@ final class IlpIngest(ctx: Ctx) extends Workload {
 
   private var firstTimed = 0
 
-  /** The first rounds of batches, untimed; later rounds are operations. */
+  /** The first rounds of batches, untimed; later rounds are operations.
+    * Traced, each batch is also replayed into the shadow tree, so it holds
+    * the same rows as the server's table when the timed replays start.
+    */
   def warmup(rounds: Int): Unit = {
     firstTimed = rounds * opsPerRound
-    (0 until firstTimed).foreach { b => cycle(b); sent += 1 }
+    (0 until firstTimed).foreach { b => if (tr.enabled) replayWrite(b); cycle(b); sent += 1 }
     rowsAcked = 0L
     writeNs = 0L
   }
@@ -275,15 +296,15 @@ final class IlpIngest(ctx: Ctx) extends Workload {
     writeMs = (t1 - t0) / 1e6 - (Jvm.codegenCompileMs - cg)
     writeNs += t1 - t0
     rowsAcked += lines.size
-    val t2 = System.nanoTime()
     tr.counted("streaming", Map("jobs" -> "matview_jobs")) {
-      tr.span("streaming.matview_refresh")(graft.streaming.MatView.refresh(ctx.spark, view(m)))
+      layers.timed("streaming.matview_refresh", "streaming.matview_refresh_ms") {
+        graft.streaming.MatView.refresh(ctx.spark, view(m))
+      }
     }
-    if (tr.enabled) tr.add("streaming.matview_refresh_ms", (System.nanoTime() - t2) / 1e6)
     val sql = java.net.URLEncoder.encode(readSql(m), UTF_8)
     val cg2 = Jvm.codegenCompileMs
     val t3 = System.nanoTime()
-    val (rc, json) = tr.span("http.read")(http.get(s"/exec?query=$sql&limit=100000"))
+    val (rc, json) = tr.span("http.read")(http.get(s"/exec?query=$sql&limit=$readLimit"))
     readMs = (System.nanoTime() - t3) / 1e6 - (Jvm.codegenCompileMs - cg2)
     if (rc != 200) throw new RuntimeException(s"/exec answered $rc: $json")
     lastRead = json
@@ -306,16 +327,14 @@ final class IlpIngest(ctx: Ctx) extends Workload {
     val t0 = System.nanoTime()
     tr.span("streaming.parse")(lines.foreach(graft.streaming.IlpParser.parse))
     tr.add("streaming.parse_ms", (System.nanoTime() - t0) / 1e6)
-    val cg = Jvm.codegenCompileMs
-    val t1 = System.nanoTime()
-    tr.counted("streaming", Map("jobs" -> "apply_jobs")) {
-      tr.span("streaming.apply") {
-        graft.streaming.IlpApply.applyLines(ctx.spark, lines, shadowDir, 1L,
-          keys.split(",").toSeq.filter(_.nonEmpty), shadowSeq)
+    applyMs = layers.engineMs {
+      tr.counted("streaming", Map("jobs" -> "apply_jobs")) {
+        layers.timed("streaming.apply", "streaming.apply_ms") {
+          graft.streaming.IlpApply.applyLines(ctx.spark, lines, shadowDir, 1L,
+            keys.split(",").toSeq.filter(_.nonEmpty), shadowSeq)
+        }
       }
     }
-    tr.add("streaming.apply_ms", (System.nanoTime() - t1) / 1e6)
-    applyMs = (System.nanoTime() - t1) / 1e6 - (Jvm.codegenCompileMs - cg)
   }
 
   override def afterOp(i: Int, k: Int, ok: Boolean): Unit = {
@@ -330,13 +349,11 @@ final class IlpIngest(ctx: Ctx) extends Workload {
       tr.add("tables.bytes_written", fresh.toSeq.map(after).sum.toDouble)
       tr.total("tables.files_written_total", fresh.size.toDouble)
       tr.total("tables.bytes_written_total", fresh.toSeq.map(after).sum.toDouble)
-      // the read in-process: files it scans and what the server added
+      // the read in-process, limited as `/exec` limits it: files it scans
+      // and what the server added
       layers.rewrites(readSql(m))
-      val cg = Jvm.codegenCompileMs
-      val t0 = System.nanoTime()
-      val df = layers.build("sql")(engine.sql(readSql(m)))
-      layers.collect(df)
-      val inproc = (System.nanoTime() - t0) / 1e6 - (Jvm.codegenCompileMs - cg)
+      var df: DataFrame = null
+      val inproc = layers.engineMs { df = layers.build("sql")(engine.sql(readSql(m)).limit(readLimit)); layers.collect(df) }
       tr.add("tables.read_files", Layers.scanFiles(df.queryExecution.executedPlan).toDouble)
       tr.add("http.wire_ms", (writeMs - applyMs) + (readMs - inproc))
     }

@@ -8,7 +8,7 @@ prints per metric the median, first and third quartiles (Python's
 statistics.quantiles, n=4) and the spread (Q3 - Q1) / median. The spread of
 each end-to-end metric, against the bound BENCHMARK.json gives it, is what
 decides whether the benchmark is steady. The full table is also written as
-JSON to perfbench/target/steady-<trace>.json.
+JSON to perfbench/target/steady-<trace>-<first seed>.json.
 """
 import argparse
 import json
@@ -60,7 +60,7 @@ def main():
             b = bounds.get(name)
             print(f"| {name} | {s['unit']} | {s['median']:.4g} | {s['q1']:.4g} | {s['q3']:.4g} | "
                   f"{s['spread']:.3f} | {'' if b is None else f'{b / 3:.3f}'} |", flush=True)
-    with open(os.path.join(HERE, "target", f"steady-{a.trace}.json"), "w") as f:
+    with open(os.path.join(HERE, "target", f"steady-{a.trace}-{a.first_seed}.json"), "w") as f:
         json.dump(table, f, indent=1)
 
 
