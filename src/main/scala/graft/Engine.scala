@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 class Engine(val spark: SparkSession, dataDir: String) {
   Tables.registerAll(spark, dataDir)
-  Engine.registerFunctions(spark)
+  Engine.ensureFunctions(spark)
 
   def sql(query: String): DataFrame =
     graft.sql.QuestSql.sql(spark, graft.sql.QuestSql.verbatimStrings(query))
@@ -35,27 +35,26 @@ class Engine(val spark: SparkSession, dataDir: String) {
 object Engine {
   def apply(spark: SparkSession, dataDir: String): Engine = new Engine(spark, dataDir)
 
-  /** Sessions whose function registry is already populated — guards
-    * [[ensureFunctions]] so the per-statement SQL path pays the ~20
-    * UDF/UDAF registrations once, not per query.
+  /** Once-per-session [[registerFunctions]]. Every QuestSql statement
+    * goes through this, so a dialect query can never fail on
+    * registration order (a query referencing e.g. `weighted_stddev` must
+    * not depend on some earlier query having registered the library),
+    * and the per-statement path pays one registry lookup instead of ~20
+    * registrations. The session's own registry is the record: the
+    * library's last function present means all of it is.
     */
-  private val fnRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Idempotent, once-per-session [[registerFunctions]]. Every
-    * QuestSql statement goes through this, so a dialect query can never
-    * fail on registration order (a query referencing e.g.
-    * `weighted_stddev` must not depend on some earlier query having
-    * registered the library).
-    */
-  def ensureFunctions(spark: SparkSession): Unit =
-    if (fnRegistered.add(Integer.toHexString(System.identityHashCode(spark))))
+  def ensureFunctions(spark: SparkSession): Unit = synchronized {
+    if (!spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(lastFunction)))
       registerFunctions(spark)
+  }
+
+  private val lastFunction = "hydrate_table_metadata"
 
   /** Expose the custom function library to SQL (reference
     * FunctionFactory registry analogue — SURVEY §2.10).
     */
-  def registerFunctions(spark: SparkSession): Unit = {
+  private def registerFunctions(spark: SparkSession): Unit = {
     // rnd_* lowerings salt their md5 stream with the long_sequence `x`
     // column; statements with no such column swap the salt to this
     // session variable (rewriteGeneratorFns), making rnd_double()
@@ -74,6 +73,7 @@ object Engine {
     graft.functions.HdrPercentile.register(spark)
     graft.functions.RangeWindow.register(spark)
     graft.functions.ArrayBuild.register(spark)
+    graft.functions.BloomProbe.register(spark)
     spark.udf.register("ksum",
       org.apache.spark.sql.functions.udaf(graft.functions.Aggregators.KSum))
     spark.udf.register("nsum",
@@ -116,6 +116,6 @@ object Engine {
     // config is immutable per session here (Sessions.local builder) —
     // reload is an honest no-op acknowledged the reference's way
     spark.udf.register("reload_config", () => true)
-    spark.udf.register("hydrate_table_metadata", (_: String) => true)
+    spark.udf.register(lastFunction, (_: String) => true) // keep last: ensureFunctions checks it
   }
 }

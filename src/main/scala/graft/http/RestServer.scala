@@ -290,19 +290,19 @@ class RestServer(engine: graft.Engine, port: Int = 0,
     }
   }
 
-  /** ILP over HTTP: body lines → distributed parse → per-measurement
-    * flatten (tags + typed fields become columns) → staged WAL-style
-    * batch apply into `ilpDir/<measurement>` → view refresh. With
-    * `dedup=k1,k2` the apply is the cross-batch DEDUP UPSERT KEYS path.
+  /** ILP over HTTP: body lines → driver-side parse → per-measurement
+    * rows (tags + typed fields become columns) → staged WAL-style batch
+    * apply into `ilpDir/<measurement>` → view refresh ([[graft.streaming.IlpApply]]).
+    * With `dedup=k1,k2` the apply is the DEDUP UPSERT KEYS path.
     */
   private def writeHandler(ex: HttpExchange): (Int, String, String) = {
     val p = params(ex)
     val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
     val lines = body.split("\n").toSeq
-    val microsMult = graft.streaming.IlpApply.precisionMult(p.getOrElse("precision", "ns"))
+    val nsPerUnit = graft.streaming.IlpApply.precisionMult(p.getOrElse("precision", "ns"))
     val dedupKeys = p.get("dedup").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
     graft.streaming.IlpApply.applyLines(engine.spark, lines, ilpDir,
-      microsMult, dedupKeys, writeSeq)
+      nsPerUnit, dedupKeys, writeSeq)
     (204, "", "")
   }
 

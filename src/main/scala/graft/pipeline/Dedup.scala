@@ -233,7 +233,7 @@ object Dedup {
       bf.writeTo(bos)
       bos.toByteArray
     }
-    graft.functions.BloomProbe.register(corpus.sparkSession)
+    graft.Engine.ensureFunctions(corpus.sparkSession)
     corpSh.filter(call_function("bloom_might_contain", lit(bfBytes), xxhash64(col("sh"))))
       .join(benchSh, Seq("sh")) // exact verify: false positives drop here
       .groupBy(col("a"), col("b")).agg(countDistinct(col("sh")).as("c"))

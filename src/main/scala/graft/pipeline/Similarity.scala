@@ -24,13 +24,12 @@ object Similarity {
   private val dot = (a: String, b: String) =>
     graft.functions.DotProductExpr.dot(col(a), col(b))
 
-  /** vec_dot resolves through the session function registry — make
-    * sure the native expression is registered before building a plan
-    * that uses it (idempotent, cheap).
+  /** vec_dot and topk_pairs resolve through the session function
+    * registry — make sure the library is registered before building a
+    * plan that uses them (once per session).
     */
   private def ensureDot(df: DataFrame): DataFrame = {
-    graft.functions.DotProductExpr.register(df.sparkSession)
-    graft.functions.TopKPairsAgg.register(df.sparkSession)
+    graft.Engine.ensureFunctions(df.sparkSession)
     df
   }
 

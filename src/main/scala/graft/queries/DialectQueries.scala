@@ -204,7 +204,7 @@ object DialectQueries extends QueryPack {
       // ipv4 function family: netmask from CIDR, dotted↔long casts,
       // subnet containment (the reference's << / <<= in function form)
       Tables.registerAll(s, dir)
-      graft.Engine.registerFunctions(s) // expression casts lower to qdb_str
+      graft.Engine.ensureFunctions(s) // expression casts lower to qdb_str
       QuestSql.sql(s,
         "SELECT event_id, " +
           "netmask('10.1.2.3/24') AS m24, " +
@@ -298,7 +298,7 @@ object DialectQueries extends QueryPack {
       // 1-D double-array function family (reference functions/array/*)
       // expanded to builtin higher-order expressions by the macro pass
       // (dot_product → the native codegen vec_dot expression)
-      graft.Engine.registerFunctions(s)
+      graft.Engine.ensureFunctions(s)
       Tables.registerAll(s, dir)
       QuestSql.sql(s,
         "SELECT vec_id, " +

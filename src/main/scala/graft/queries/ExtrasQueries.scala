@@ -135,7 +135,7 @@ object ExtrasQueries extends QueryPack {
       // d × 10^40 built per row; the oracle states each result by
       // string construction (algebraic identities), the engine computes
       // it through the 256-bit BigDecimal expressions
-      graft.Engine.registerFunctions(s)
+      graft.Engine.ensureFunctions(s)
       import graft.functions.{Decimal256Ops => D}
       val id = col("event_id")
       val d = (id % 9 + 1).cast("string")
@@ -161,7 +161,7 @@ object ExtrasQueries extends QueryPack {
       // decimal256 group-by tier: exact sum / scale-6 avg / numeric
       // min-max over 31-digit values, grouped so the oracle can state
       // every aggregate in closed form
-      graft.Engine.registerFunctions(s)
+      graft.Engine.ensureFunctions(s)
       val id = col("event_id")
       val d = (id % 9 + 1)
       val a = concat(d.cast("string"), lit("0" * 30))
@@ -184,7 +184,7 @@ object ExtrasQueries extends QueryPack {
       // native wrap-around add (carry across limbs), display trim, eq.
       // castToLong256(-1) is the all-ones low limb, so +(id+1) carries
       // into limb 1 — exercising the chain the hex concat can't express
-      graft.Engine.registerFunctions(s)
+      graft.Engine.ensureFunctions(s)
       val id = col("event_id")
       val h = Long256Ops.toLong256(id, id * 3 + 1, lit(0L), lit(0L))
       Tables.events(s, dir).filter(id < 1000)
@@ -206,7 +206,7 @@ object ExtrasQueries extends QueryPack {
       // and/or/xor/not, and native binary comparison (lexicographic =
       // unsigned numeric). Results project through long256_bin_hex so
       // the oracle compares canonical hex.
-      graft.Engine.registerFunctions(s)
+      graft.Engine.ensureFunctions(s)
       val id = col("event_id")
       val h = Long256Bin.toLong256Bin(id, id * 3 + 1, lit(0L), lit(0L))
       val mask = Long256Bin.toLong256Bin(
@@ -236,7 +236,7 @@ object ExtrasQueries extends QueryPack {
       // low limb via the 2^63 + id construction), native binary
       // min/max (unsigned numeric order), cross-limb max, and
       // count_distinct on binary — no custom code for the latter three.
-      graft.Engine.registerFunctions(s)
+      graft.Engine.ensureFunctions(s)
       val id = col("event_id")
       val d = (id % 7).cast("int")
       val h = Long256Bin.toLong256Bin(lit(Long.MinValue) + id, lit(0L), lit(0L), lit(0L))

@@ -2,11 +2,22 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
-/** Transport-agnostic ILP batch apply: protocol lines → distributed
-  * parse → per-measurement dynamic-schema flatten → staged WAL-style
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types._
+
+/** Transport-agnostic ILP batch apply: protocol lines → driver-side parse
+  * → per-measurement dynamic-schema local relation → staged WAL-style
   * batch apply into `ilpDir/<measurement>` → queryable view refresh.
+  *
+  * The lines are already on the driver (an HTTP body, a UDP buffer), so
+  * they are parsed there once; each measurement's schema, its in-batch
+  * DEDUP survivors and the days it touches are known before Spark runs.
+  * What is left for Spark is the write itself: one job per measurement,
+  * plus a read of the touched days when an upsert meets existing rows,
+  * plus the view's schema read.
   *
   * The reference funnels all three line-protocol transports into one
   * writer path (`cutlass/line/tcp/LineTcpMeasurementScheduler.java:70` →
@@ -15,9 +26,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[IlpUdp]]).
   */
 object IlpApply {
+  import IlpParser.{Bool, F64, FieldValue, I64, Point, Str}
 
-  /** Micros multiplier for an influx `precision=` value ("ns" default —
-    * trailing ILP timestamps are nanos on the wire).
+  /** Nanoseconds per unit of the trailing timestamp for an influx
+    * `precision=` value ("ns" default — the wire number is nanos).
     */
   def precisionMult(p: String): Long = p match {
     case "ns" => 1L
@@ -27,63 +39,67 @@ object IlpApply {
     case other => throw new IllegalArgumentException(s"bad precision: $other")
   }
 
-  /** Parse + apply one batch of ILP lines. Returns rows ingested.
+  /** Field value types in column order after the sorted tag keys. */
+  private val fieldTypes: Seq[(DataType, PartialFunction[FieldValue, Any])] = Seq(
+    DoubleType -> { case F64(v) => v },
+    LongType -> { case I64(v) => v },
+    StringType -> { case Str(v) => v },
+    BooleanType -> { case Bool(v) => v })
+
+  /** Parse + apply one batch of ILP lines. Returns rows ingested (parsed
+    * lines, before DEDUP).
     *
-    * @param microsMult rescale factor for the trailing timestamp
-    * @param dedupKeys  non-empty → cross-batch DEDUP UPSERT KEYS apply
-    * @param seq        per-endpoint monotonic batch counter (idempotence id)
+    * @param nsPerUnit nanoseconds per unit of the trailing timestamp
+    * @param dedupKeys non-empty → DEDUP UPSERT KEYS(ts, keys...): within
+    *                  the batch the last line wins, across batches the
+    *                  new row wins
+    * @param seq       per-endpoint monotonic batch counter (idempotence id)
     */
   def applyLines(spark: SparkSession, lines: Seq[String], ilpDir: String,
-                 microsMult: Long, dedupKeys: Seq[String],
+                 nsPerUnit: Long, dedupKeys: Seq[String],
                  seq: AtomicLong): Long = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val clean = lines.filter(_.trim.nonEmpty)
-    if (clean.isEmpty) return 0L
-    val parsed0 = Ingest.parseIlp(spark.createDataset(clean))
-    // the wire number is in `precision` units: micros scale by div-1000
-    // then microsMult; nanos scale by microsMult directly (ns-per-unit)
-    val parsed = (if (microsMult == 1L) parsed0
-      else parsed0
-        .withColumn("ts", timestamp_micros(unix_micros(col("ts")) * microsMult))
-        .withColumn("ts_ns", col("ts_ns") * microsMult))
-      .withColumn("ts", coalesce(col("ts"), current_timestamp())) // server-time rows
-      .withColumn("ts_ns", coalesce(col("ts_ns"), unix_micros(col("ts")) * 1000L))
-      .persist()
-    try {
-      val measurements = parsed.select("measurement").distinct()
-        .collect().map(_.getString(0)).sorted // bounded: tables touched by one batch
-      var total = 0L
-      measurements.foreach { m =>
-        val rows = flattenIlp(parsed.filter(col("measurement") === m))
-        total += rows.count()
-        val tableDir = s"$ilpDir/$m"
-        val batchId = seq.incrementAndGet() * 1000000L + System.nanoTime() % 1000000L
-        if (dedupKeys.nonEmpty)
-          Ingest.upsertBatch(rows, batchId, tableDir, "ts", dedupKeys)
-        else
-          Ingest.applyBatch(rows, batchId, tableDir, "ts", Nil)
-        spark.read.parquet(tableDir).drop("__day").createOrReplaceTempView(m)
+    val points = lines.flatMap(IlpParser.parse)
+    val zone = DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+    val nowMicros = DateTimeUtils.instantToMicros(java.time.Instant.now()) // server-time rows
+    points.groupBy(_.measurement).toSeq.sortBy(_._1).foreach { case (m, ps) =>
+      val tableDir = s"$ilpDir/$m"
+      val batchId = seq.incrementAndGet() * 1000000L + System.nanoTime() % 1000000L
+      // tags, then typed fields, each sorted by key: every key observed
+      // in the batch becomes a column (the reference adds table columns
+      // the same lazily-on-ingest way)
+      val tagCols = ps.flatMap(_.tags.keys).distinct.sorted
+        .map(k => (k, StringType: DataType, (p: Point) => p.tags.getOrElse(k, null)))
+      val fieldCols = fieldTypes.flatMap { case (t, value) =>
+        ps.flatMap(_.fields.collect { case (k, v) if value.isDefinedAt(v) => k }).distinct.sorted
+          .map(k => (k, t, (p: Point) => p.fields.get(k).collect(value).orNull))
       }
-      total
-    } finally { parsed.unpersist(); () }
-  }
-
-  /** Dynamic-schema projection: every tag and field key observed in the
-    * batch becomes a column (the reference adds table columns the same
-    * lazily-on-ingest way).
-    */
-  def flattenIlp(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    def keys(c: String) = df.select(explode(map_keys(col(c)))).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-    val cols =
-      keys("tags").map(k => col("tags")(k).as(k)) ++
-        keys("f_double").map(k => col("f_double")(k).as(k)) ++
-        keys("f_long").map(k => col("f_long")(k).as(k)) ++
-        keys("f_string").map(k => col("f_string")(k).as(k)) ++
-        keys("f_bool").map(k => col("f_bool")(k).as(k)) :+
-        col("ts") :+ col("ts_ns")
-    df.select(cols: _*)
+      val cols = tagCols ++ fieldCols
+      val schema = StructType(cols.map { case (k, t, _) => StructField(k, t) } ++ Seq(
+        StructField("ts", TimestampType, nullable = false),
+        StructField("ts_ns", LongType, nullable = false),
+        StructField("__day", DateType, nullable = false)))
+      val keyIdx = dedupKeys.map { k =>
+        val i = cols.indexWhere(_._1 == k)
+        require(i >= 0, s"DEDUP key $k is not a column of $m")
+        i
+      }
+      val rows = ps.map { p =>
+        val ns = p.tsNanos.filter(_ >= 0).map(_ * nsPerUnit)
+        val micros = ns.fold(nowMicros)(Math.floorDiv(_, 1000L))
+        val at = DateTimeUtils.microsToInstant(micros)
+        Row.fromSeq(cols.map(_._3(p)) ++ Seq(at, ns.getOrElse(micros * 1000L), at.atZone(zone).toLocalDate))
+      }
+      if (dedupKeys.isEmpty)
+        Ingest.append(spark.createDataFrame(rows.asJava, schema).coalesce(1), batchId, tableDir, "ts")
+      else {
+        val tsIdx = cols.size
+        val last = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Row]
+        rows.foreach(r => last(Ingest.rowKey(r, tsIdx, keyIdx)) = r)
+        Ingest.upsert(spark.createDataFrame(last.values.toSeq.asJava, schema), last.keySet.toSet,
+          last.values.map(_.get(tsIdx + 2).toString).toSeq.distinct, batchId, tableDir, "ts", dedupKeys)
+      }
+      spark.read.parquet(tableDir).drop("__day").createOrReplaceTempView(m)
+    }
+    points.size.toLong
   }
 }

@@ -6,9 +6,10 @@ package graft.streaming
   * (`cutlass/line/tcp/LineTcpParser.java` — behavior only; clean-room
   * implementation of the published protocol).
   *
-  * Pure Scala, allocation-light, usable inside executors (serializable
-  * object functions) — the streaming pipeline maps it over
-  * `Dataset[String]` partitions.
+  * Pure Scala, allocation-light. [[IlpApply]] runs it on the driver over
+  * a batch that is already there; the streaming TCP pipeline
+  * ([[Ingest.parseIlp]]) maps it over `Dataset[String]` partitions on the
+  * executors.
   */
 object IlpParser {
   sealed trait FieldValue

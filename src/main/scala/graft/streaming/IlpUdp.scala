@@ -13,7 +13,7 @@ import java.util.concurrent.atomic.AtomicLong
   * Each datagram carries one or more newline-separated ILP lines. A
   * daemon receiver thread drains the socket into an in-memory queue;
   * once `batchLines` lines accumulate, the batch is applied through the
-  * shared [[IlpApply]] tail (same parse/flatten/apply as TCP and HTTP).
+  * shared [[IlpApply]] tail (the same parse and apply as HTTP `/write`).
   * `flush()` forces a commit — the analogue of the reference's
   * commit-timer tick; UDP drops under pressure are accepted semantics
   * on this transport (the reference documents the same trade-off).
@@ -29,7 +29,7 @@ class IlpUdp(engine: graft.Engine, port: Int = 0,
   private val pendingCount = new AtomicLong(0L)
   private val received = new AtomicLong(0L)
   private val seq = new AtomicLong(0L)
-  private val microsMult = IlpApply.precisionMult(precision)
+  private val nsPerUnit = IlpApply.precisionMult(precision)
   @volatile private var running = false
 
   private val receiver = new Thread(() => {
@@ -75,6 +75,6 @@ class IlpUdp(engine: graft.Engine, port: Int = 0,
     pendingCount.addAndGet(-n)
     val lines = batch.result()
     if (lines.isEmpty) 0L
-    else IlpApply.applyLines(engine.spark, lines, ilpDir, microsMult, dedupKeys, seq)
+    else IlpApply.applyLines(engine.spark, lines, ilpDir, nsPerUnit, dedupKeys, seq)
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 
 /** Structured-Streaming ingest pipeline — the Spark re-expression of the
@@ -53,27 +54,41 @@ object Ingest {
     f.delete()
   }
 
-  /** Move staged `__day=*` partition files into the table under
-    * batch-stamped deterministic names. Idempotent: leftovers of an
-    * earlier crashed publish of the same batch are removed first, so
-    * re-running after any crash converges to exactly one copy.
+  private def dataFiles(dir: java.io.File): Array[java.io.File] =
+    Option(dir.listFiles()).getOrElse(Array.empty).filter(_.isFile)
+
+  private def stagedDays(staging: java.io.File): Array[java.io.File] =
+    Option(staging.listFiles()).getOrElse(Array.empty)
+      .filter(d => d.isDirectory && d.getName.startsWith("__day=")).sortBy(_.getName)
+
+  /** Sort within `__day` partitions by ts and write them under `dir`: one
+    * file per day per input partition.
     */
-  private def publishStaged(staging: java.io.File, tableDir: String, batchId: Long): Unit = {
-    val parts = Option(staging.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("__day="))
-    parts.foreach { p =>
+  private def write(rows: DataFrame, dir: String, tsCol: String): Unit =
+    rows.sortWithinPartitions(col("__day"), col(tsCol))
+      .write.mode("overwrite").partitionBy("__day").parquet(dir)
+
+  /** Move staged `__day=*` files into the table as
+    * `graft-b<batchId>-<staged name>`, after deleting the day's files that
+    * `keep` rejects. A target name depends only on its staged name, so a
+    * publish cut short by a crash resumes from the files still staged
+    * without overwriting the ones it already moved.
+    */
+  private def publishStaged(staging: java.io.File, tableDir: String, batchId: Long,
+                            keep: java.io.File => Boolean): Unit =
+    stagedDays(staging).foreach { p =>
       val target = new java.io.File(tableDir, p.getName)
       target.mkdirs()
-      Option(target.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(s"graft-b$batchId-")).foreach(_.delete())
-      p.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(target, s"graft-b$batchId-$i.parquet").toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
+      dataFiles(target).filterNot(keep).foreach(_.delete())
+      p.listFiles().filter(_.getName.startsWith("part-")).foreach { f =>
+        java.nio.file.Files.move(f.toPath,
+          new java.io.File(target, s"graft-b$batchId-${f.getName}").toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }
     }
-  }
+
+  private def ownFile(batchId: Long)(f: java.io.File): Boolean =
+    f.getName.startsWith(s"graft-b$batchId-")
 
   // ---- dirty-range tracking (consumed by MatView.refresh) -----------
   // The reference's mat-view refresh walks WAL txn ranges to find which
@@ -112,22 +127,27 @@ object Ingest {
     */
   def applyBatch(batch: DataFrame, batchId: Long, tableDir: String,
                  tsCol: String, dedupKeys: Seq[String]): Unit = {
-    val marker = batchMarker(tableDir, batchId)
-    if (marker.exists()) return // retried batch — already applied
-
     val deduped =
       if (dedupKeys.isEmpty) batch
       else batch.dropDuplicates(tsCol +: dedupKeys)
+    append(withDay(deduped, tsCol).repartition(col("__day")), batchId, tableDir, tsCol)
+  }
+
+  private def withDay(batch: DataFrame, tsCol: String): DataFrame =
+    batch.withColumn("__day", to_date(col(tsCol)))
+
+  /** [[applyBatch]] for rows that already carry `__day` and are laid out
+    * as they should be written (the ILP path passes one driver-built
+    * partition, so the write is one job with no shuffle).
+    */
+  private[streaming] def append(rows: DataFrame, batchId: Long, tableDir: String,
+                                tsCol: String): Unit = {
+    val marker = batchMarker(tableDir, batchId)
+    if (marker.exists()) return // retried batch — already applied
     val staging = stagingDir(tableDir, batchId)
-    deduped
-      .withColumn("__day", to_date(col(tsCol)))
-      .repartition(col("__day"))
-      .sortWithinPartitions(col("__day"), col(tsCol))
-      .write.mode("overwrite").partitionBy("__day").parquet(staging.getPath)
-    val touched = Option(staging.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("__day="))
-      .map(_.getName.stripPrefix("__day="))
-    publishStaged(staging, tableDir, batchId)
+    write(rows, staging.getPath, tsCol)
+    val touched = stagedDays(staging).map(_.getName.stripPrefix("__day="))
+    publishStaged(staging, tableDir, batchId, keep = f => !ownFile(batchId)(f))
     markDirty(tableDir, touched)
     marker.createNewFile()
     deleteRecursive(staging)
@@ -137,63 +157,69 @@ object Ingest {
     * incoming txn against rows already IN the table
     * (`cairo/TableWriter.java:342`, `dedup.cpp`). Spark analogue of a
     * Delta MERGE on plain parquet: read only the day partitions the
-    * batch touches, anti-join out clashing old rows, rewrite those
-    * partitions with old+new merged and re-sorted. Cost is bounded by
-    * the touched partitions, not the table.
-    *
-    * Crash safety: the merged partitions are checkpointed to
-    * `_graft_staging/batch-<id>` (with Spark's `_SUCCESS` marker)
-    * BEFORE the dynamic partition overwrite, so the overwrite never
-    * recomputes from inputs it is deleting; a retry after a crash
-    * mid-overwrite re-publishes the durable staged copy rather than
-    * re-merging partially-replaced partitions. (Atomicity across the
-    * overwrite's own commit is the file committer's; a transactional
-    * table format would close that last window.)
+    * batch touches, drop old rows whose (ts, keys) the batch carries,
+    * and rewrite those partitions with old+new merged and re-sorted.
+    * Cost is bounded by the touched partitions, not the table. The
+    * batch's (ts, keys) and days are collected to the driver (bounded:
+    * one micro-batch); see [[upsert]].
     */
   def upsertBatch(batch: DataFrame, batchId: Long, tableDir: String,
                   tsCol: String, dedupKeys: Seq[String]): Unit = {
-    val spark = batch.sparkSession
+    if (batchMarker(tableDir, batchId).exists()) return
+    val incoming = withDay(batch.dropDuplicates(tsCol +: dedupKeys), tsCol)
+    val ids = incoming.select((tsCol +: dedupKeys :+ "__day").map(col): _*).collect()
+    val keyIdx = dedupKeys.indices.map(_ + 1)
+    upsert(incoming, ids.map(rowKey(_, 0, keyIdx)).toSet,
+      ids.map(_.get(dedupKeys.size + 1).toString).distinct.toSeq,
+      batchId, tableDir, tsCol, dedupKeys)
+  }
+
+  /** A row's DEDUP identity: ts as micros, then the key values. */
+  private[streaming] def rowKey(r: Row, tsIdx: Int, keyIdx: Seq[Int]): Seq[Any] =
+    DateTimeUtils.anyToMicros(r.get(tsIdx)) +: keyIdx.map(r.get)
+
+  /** The merge of [[upsertBatch]] for a batch already deduped within
+    * itself, given its `__day` column, its `(ts micros, keys...)`
+    * identities and the days it touches. Old rows of those days whose
+    * identity is in `keys` are dropped (a null key never matches, as in
+    * an equi-join), and the merged days are written to
+    * `_graft_staging/batch-<id>` in one job: one sorted file per day.
+    * Spark's `_SUCCESS` marks that copy durable; the publish then
+    * replaces each day's files with the staged ones. A replay after a
+    * crash before `_SUCCESS` merges again from the untouched table; after
+    * it, the replay finishes the publish from the staged copy, keeping
+    * the files of this batch that were already moved.
+    */
+  private[streaming] def upsert(incoming: DataFrame, keys: Set[Seq[Any]], days: Seq[String],
+                                batchId: Long, tableDir: String, tsCol: String,
+                                dedupKeys: Seq[String]): Unit = {
     val marker = batchMarker(tableDir, batchId)
     if (marker.exists()) return
-
-    val incoming = batch.dropDuplicates(tsCol +: dedupKeys)
-      .withColumn("__day", to_date(col(tsCol)))
-    val days = incoming.select(col("__day")).distinct()
-      .collect().map(_.get(0).toString) // bounded: distinct days in one batch
-    val existingDirs = days.map(d => s"$tableDir/__day=$d")
-      .filter(p => new java.io.File(p).exists())
-
-    if (existingDirs.isEmpty) {
-      val staging = stagingDir(tableDir, batchId)
-      incoming.repartition(col("__day"))
-        .sortWithinPartitions(col("__day"), col(tsCol))
-        .write.mode("overwrite").partitionBy("__day").parquet(staging.getPath)
-      publishStaged(staging, tableDir, batchId)
-      markDirty(tableDir, days)
-      marker.createNewFile()
-      deleteRecursive(staging)
-    } else {
-      val staging = stagingDir(tableDir, batchId)
-      val staged = new java.io.File(staging, "_SUCCESS").exists()
-      if (!staged) {
-        val existing = spark.read
-          .option("basePath", tableDir).parquet(existingDirs: _*)
-        // new rows win: drop old rows whose (ts, keys) clash
-        val kept = existing.join(incoming.select((tsCol +: dedupKeys).map(col): _*),
-          tsCol +: dedupKeys, "left_anti")
-        kept.unionByName(incoming)
-          .write.mode("overwrite").parquet(staging.getPath)
-      }
-      spark.read.parquet(staging.getPath)
-        .repartition(col("__day"))
-        .sortWithinPartitions(col("__day"), col(tsCol))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__day").parquet(tableDir)
-      markDirty(tableDir, days)
-      marker.createNewFile()
-      deleteRecursive(staging)
+    val staging = stagingDir(tableDir, batchId)
+    val staged = new java.io.File(staging, "_SUCCESS").exists()
+    if (!staged) {
+      val existingDirs = days.map(d => new java.io.File(tableDir, s"__day=$d"))
+        .filter(d => dataFiles(d).exists(_.getName.endsWith(".parquet"))).map(_.getPath)
+      val merged =
+        if (existingDirs.isEmpty) incoming
+        else {
+          val existing = incoming.sparkSession.read
+            .option("basePath", tableDir).parquet(existingDirs: _*)
+          val tsIdx = existing.schema.fieldIndex(tsCol)
+          val keyIdx = dedupKeys.map(existing.schema.fieldIndex)
+          existing.filter { (r: Row) =>
+            val k = rowKey(r, tsIdx, keyIdx)
+            k.contains(null) || !keys(k)
+          }.unionByName(incoming)
+        }
+      write(merged.coalesce(1), staging.getPath, tsCol)
     }
+    // a fresh staged copy holds every row of its days, this batch's
+    // earlier files included; a resumed one keeps what it already moved
+    publishStaged(staging, tableDir, batchId, keep = f => staged && ownFile(batchId)(f))
+    markDirty(tableDir, days)
+    marker.createNewFile()
+    deleteRecursive(staging)
   }
 
   /** Wire a parsed+projected stream into a table with WAL semantics. */

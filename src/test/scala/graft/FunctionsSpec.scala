@@ -63,7 +63,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("native GeoHashEncodeExpr matches the closed-form SQL lowering") {
-    graft.functions.GeoHashEncodeExpr.register(spark)
+    Engine.ensureFunctions(spark)
     val df = Tables.events(spark, sfDir).limit(200)
       .withColumn("lat", $"value" / 490.0 * 170.0 - 85.0)
       .withColumn("lon", ($"event_id" % 360).cast("double") - 179.5)

@@ -13,7 +13,7 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
 object GeneratorSqlProps extends Properties("generator-sql") {
   private lazy val spark = {
     val s = Sessions.local(4)
-    Engine.registerFunctions(s)
+    Engine.ensureFunctions(s)
     s
   }
 

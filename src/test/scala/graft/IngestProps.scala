@@ -16,7 +16,11 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
   *   - a crash replay (marker lost after publish) converges instead of
   *     duplicating or losing rows,
   *   - upsert replaces ALL prior rows sharing (ts, key), append keeps
-  *     them.
+  *     them,
+  *   - through ILP `applyLines` with DEDUP, (ts, key) clashes inside a
+  *     batch keep the batch's last line, as the reference does
+  *     (`LiveViewDedupBaseTest`: two rows on one key in one INSERT keep
+  *     the second).
   */
 object IngestProps extends Properties("ingest") {
   private lazy val spark = Sessions.local(4)
@@ -102,5 +106,33 @@ object IngestProps extends Properties("ingest") {
           .select(org.apache.spark.sql.functions.unix_micros($"ts")).as[Long].collect()
         ts.sameElements(ts.sorted)
       }
+    }
+
+  // ILP batches of (sym, hour slot, value) lines: few keys, so (ts, sym)
+  // clashes with different values are common inside and across batches
+  private val genIlp: Gen[List[List[(String, Int, Long)]]] =
+    Gen.chooseNum(1, 3).flatMap(Gen.listOfN(_, Gen.chooseNum(1, 12).flatMap(Gen.listOfN(_, for {
+      s <- Gen.oneOf(syms)
+      slot <- Gen.chooseNum(0, 5)
+      v <- Gen.chooseNum(0L, 999L)
+    } yield (s, slot, v)))))
+
+  property("ILP DEDUP: the last line wins within a batch, the new row across batches") =
+    Prop.forAll(genIlp) { batches =>
+      import spark.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("fuzz_ilp").toString
+      val seq = new java.util.concurrent.atomic.AtomicLong(0L)
+      val slotSec = 12 * 3600L // six slots over three days
+      var oracle = Map.empty[(String, Long), Long]
+      batches.foreach { b =>
+        val lines = b.map { case (s, slot, v) => s"fz,sym=$s v=${v}i ${(1704067200L + slot * slotSec) * 1000000000L}" }
+        graft.streaming.IlpApply.applyLines(spark, lines, dir, 1L, Seq("sym"), seq)
+        b.foreach { case (s, slot, v) => oracle += (s, 1704067200L + slot * slotSec) -> v }
+      }
+      val got = spark.read.parquet(s"$dir/fz")
+        .select($"sym", org.apache.spark.sql.functions.unix_seconds($"ts"), $"v")
+        .as[(String, Long, Long)].collect().toList
+      val want = oracle.toList.map { case ((s, t), v) => (s, t, v) }
+      Prop(got.sorted == want.sorted) :| s"got=${got.sorted} want=${want.sorted}"
     }
 }

@@ -8,7 +8,7 @@ class Long256Spec extends SparkSpec {
   import spark.implicits._
 
   test("vec_dot: native dot matches lambda spelling, null/length semantics preserved") {
-    graft.functions.DotProductExpr.register(spark)
+    Engine.ensureFunctions(spark)
     val df = Seq(
       (1L, Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f)),   // 32
       (2L, Seq(0.5f, -1.5f), Seq(2.0f, 2.0f)),              // -2
@@ -65,7 +65,7 @@ class Long256Spec extends SparkSpec {
   }
 
   test("decimal256: exact arithmetic past 38 digits, reference round modes, overflow throws") {
-    Engine.registerFunctions(spark)
+    Engine.ensureFunctions(spark)
     import graft.functions.Decimal256Ops.{binop, unop}
     import org.apache.spark.unsafe.types.UTF8String.{fromString => u}
     def b(a: String, bb: String, op: String, scale: Int = 0): String = {
@@ -99,7 +99,7 @@ class Long256Spec extends SparkSpec {
   }
 
   test("decimal256 aggregates: exact sum, numeric min/max, nulls skipped, overflow throws") {
-    Engine.registerFunctions(spark)
+    Engine.ensureFunctions(spark)
     val df = Seq(
       ("a", "1" + "0" * 40), ("a", "2" + "0" * 40), ("a", null), // null skipped
       ("b", "9"), ("b", "10") // numeric order: min 9 < 10 (string order says '10' < '9')
@@ -124,7 +124,7 @@ class Long256Spec extends SparkSpec {
   }
 
   test("long256 column API + SQL registration execute codegen'd") {
-    Engine.registerFunctions(spark)
+    Engine.ensureFunctions(spark)
     val df = Seq((1L, 2L), (-1L, 3L)).toDF("a", "b")
       .select(Long256Ops.long256Add(
         Long256Ops.castToLong256($"a"), Long256Ops.castToLong256($"b")).as("s"))

@@ -220,6 +220,23 @@ class QuestSqlSpec extends SparkSpec {
     assert(spark.sql("SELECT ts_ns FROM nstr2").head().getLong(0) == 1704067200123000000L)
   }
 
+  test("ILP precision=us|ms|s keeps the sub-second digits of the designated ts") {
+    val dir = java.nio.file.Files.createTempDirectory("ilp_prec").toString
+    val seq = new java.util.concurrent.atomic.AtomicLong(0L)
+    def ingest(m: String, precision: String, wire: Long): (String, Long) = {
+      graft.streaming.IlpApply.applyLines(spark, Seq(s"$m,sym=A price=1.0 $wire"), dir,
+        graft.streaming.IlpApply.precisionMult(precision), Nil, seq)
+      val r = spark.sql(s"SELECT CAST(ts AS STRING), ts_ns FROM $m").head()
+      (r.getString(0), r.getLong(1))
+    }
+    assert(ingest("prec_us", "us", 1704067200123456L) ==
+      (("2024-01-01 00:00:00.123456", 1704067200123456000L)))
+    assert(ingest("prec_ms", "ms", 1704067200123L) ==
+      (("2024-01-01 00:00:00.123", 1704067200123000000L)))
+    assert(ingest("prec_s", "s", 1704067201L) ==
+      (("2024-01-01 00:00:01", 1704067201000000000L)))
+  }
+
   test("interval literal IN 'yyyy-MM' becomes a half-open range") {
     val n = engine.sql("SELECT count(*) AS n FROM events WHERE ts IN '2024-01'").head().getLong(0)
     val exact = Tables.events(spark, sfDir)
@@ -641,7 +658,7 @@ class QuestSqlSpec extends SparkSpec {
   }
 
   test("operational helpers: sleep blocks and returns true, touch forces the scan") {
-    Engine.registerFunctions(spark)
+    Engine.ensureFunctions(spark)
     val t0 = System.nanoTime()
     val r = engine.sql("SELECT sleep(120) AS ok FROM long_sequence(1)").head()
     assert(r.getBoolean(0) && (System.nanoTime() - t0) >= 120e6.toLong)

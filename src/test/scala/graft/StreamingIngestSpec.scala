@@ -84,6 +84,67 @@ class StreamingIngestSpec extends SparkSpec {
     assert(out.toSeq == Seq(("A", 9.0), ("B", 2.0)))
   }
 
+  test("upsertBatch replay after a crash mid-publish converges from the staged copy") {
+    val tableDir = tmp("crash_publish")
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    Ingest.upsertBatch(Seq(("A", 1.0, ts("2024-01-01 00:00:00")), ("B", 2.0, ts("2024-01-02 00:00:00")),
+      ("C", 3.0, ts("2024-01-02 06:00:00"))).toDF("sym", "price", "ts"), 0L, tableDir, "ts", Seq("sym"))
+    val b1 = Seq(("A", 9.0, ts("2024-01-01 00:00:00")), ("B", 8.0, ts("2024-01-02 00:00:00")),
+      ("D", 4.0, ts("2024-01-04 00:00:00"))).toDF("sym", "price", "ts")
+    // a plain file where the last day's directory should go: the publish
+    // moves the first two days, then fails like a crash would
+    val blocker = new java.io.File(tableDir, "__day=2024-01-04")
+    assert(blocker.createNewFile())
+    intercept[java.io.IOException](Ingest.upsertBatch(b1, 1L, tableDir, "ts", Seq("sym")))
+    assert(new java.io.File(s"$tableDir/_graft_staging/batch-1/_SUCCESS").exists())
+    assert(!new java.io.File(s"$tableDir/_graft_batches/batch-1").exists())
+    assert(blocker.delete())
+    Ingest.upsertBatch(b1, 1L, tableDir, "ts", Seq("sym")) // replay
+    val out = spark.read.parquet(tableDir).orderBy($"sym")
+      .collect().map(r => (r.getAs[String]("sym"), r.getAs[Double]("price")))
+    assert(out.toSeq == Seq(("A", 9.0), ("B", 8.0), ("C", 3.0), ("D", 4.0)))
+    assert(Ingest.dirtyDays(tableDir) == Seq("2024-01-01", "2024-01-02", "2024-01-04"))
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; org.apache.spark.TestBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    n.get
+  }
+
+  test("one ILP batch runs at most 3 Spark jobs: append, dedup into a new day, dedup into existing days") {
+    import graft.streaming.IlpApply
+    val dir = tmp("ilp_jobs")
+    val seq = new java.util.concurrent.atomic.AtomicLong(0L)
+    // 150 lines on each of two days from 2024-01-01 + firstDay; the same
+    // (ts, sym) keys on every day
+    def lines(m: String, px: Int, firstDay: Int) = (0 until 300).map { i =>
+      val sec = 1704067200L + (firstDay + i % 2) * 86400L + i / 2
+      s"$m,sym=S${i / 2 % 10} px=$px.5,qty=${i}i ${sec}000000000"
+    }
+    def apply(ls: Seq[String], keys: Seq[String]) =
+      jobs(IlpApply.applyLines(spark, ls, dir, 1L, keys, seq))
+    val append = apply(lines("jobs_append", 1, 0), Nil)
+    val dedupNew = apply(lines("jobs_dedup", 1, 0), Seq("sym"))
+    val dedupExisting = apply(lines("jobs_dedup", 2, 1), Seq("sym")) // days 2024-01-02 and -03
+    assert(Seq(append, dedupNew, dedupExisting).forall(_ <= 3),
+      s"jobs: append $append, dedup into a new day $dedupNew, dedup into existing days $dedupExisting")
+    assert(spark.sql("SELECT count(*) FROM jobs_append").head().getLong(0) == 300L)
+    // the second batch re-sent the first batch's day-2 rows with px 2.5
+    val byPx = spark.sql("SELECT px, count(*) FROM jobs_dedup GROUP BY px").collect()
+      .map(r => r.getDouble(0) -> r.getLong(1)).toMap
+    assert(byPx == Map(1.5 -> 150L, 2.5 -> 300L))
+  }
+
   test("upsertBatch dedups against rows already in the table (new wins)") {
     val tableDir = tmp("upsert_table")
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{TopKPairsAgg, TopKPairsBuf}
+import graft.functions.TopKPairsBuf
 import org.apache.spark.sql.functions._
 
 class TopKPairsSpec extends SparkSpec {
@@ -25,7 +25,7 @@ class TopKPairsSpec extends SparkSpec {
   }
 
   test("aggregate: per-key top-k equals a window ranking, partition-invariant") {
-    graft.functions.TopKPairsAgg.register(spark)
+    Engine.ensureFunctions(spark)
     val rnd = new scala.util.Random(11)
     val rows = Seq.fill(5000)((rnd.nextInt(7).toLong, rnd.nextLong() % 100000,
       rnd.nextLong() % 100000))
@@ -44,7 +44,7 @@ class TopKPairsSpec extends SparkSpec {
   }
 
   test("aggregate: result stays ordered and bounded when a key has fewer than k rows") {
-    graft.functions.TopKPairsAgg.register(spark)
+    Engine.ensureFunctions(spark)
     val df = Seq((1L, 5L, 50L), (1L, 3L, 30L), (2L, 9L, 90L)).toDF("key", "ord", "id")
     val got = df.groupBy($"key")
       .agg(call_function("topk_pairs", struct($"ord", $"id"), lit(10)).as("top"))
